@@ -334,6 +334,15 @@ def action_from_json(line: str) -> Action | None:
     return None
 
 
+def read_commit_actions(store, path: str):
+    """The actions of one commit file in file order, as a generator;
+    lines of unknown action types are skipped."""
+    for line in store.read(path):
+        a = action_from_json(line)
+        if a is not None:
+            yield a
+
+
 def encode_path(path: str) -> str:
     """Percent-encode a relative file path for storage in the log, the way
     delta writes paths (RFC 2396-ish; '/' kept)."""

@@ -335,31 +335,6 @@ def iter_checkpoint_actions(
                     yield a
 
 
-def iter_checkpoint_actions_pruned(
-    paths: list[str],
-    store: LogStore | None,
-    column: str,
-    batch_size: int = 10_000,
-):
-    """Actions of ONE top-level kind (e.g. 'txn', 'remove'): a readability
-    alias for the single-column projected read — parquet column pruning +
-    Arrow-side null drop both live in iter_checkpoint_actions, so there is
-    exactly one implementation of 'pruned checkpoint action read'."""
-    yield from iter_checkpoint_actions(
-        paths, store, batch_size=batch_size, columns=[column]
-    )
-
-
-def read_checkpoint_actions(
-    paths: list[str],
-    store: LogStore | None = None,
-    columns: list[str] | None = None,
-) -> list[Action]:
-    """Materialized variant of iter_checkpoint_actions (reverse P&M search
-    needs a concrete batch)."""
-    return list(iter_checkpoint_actions(paths, store, columns=columns))
-
-
 def _map_to_dict(v):
     if v is None:
         return {}

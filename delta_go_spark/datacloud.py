@@ -34,10 +34,6 @@ _FALSE = {"0", "false", "no", "off"}
 _probe_cache: dict[str, bool] = {}
 
 
-def scheme_of(uri: str) -> str:
-    return uri.split("://", 1)[0].lower() if "://" in uri else "file"
-
-
 def _probe_key(uri: str) -> str:
     if "://" not in uri:
         return "file"

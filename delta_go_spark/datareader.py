@@ -15,7 +15,6 @@ compute engine it delegates to.  Design for scale:
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,8 +117,3 @@ def files_to_df(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -
 
 def snapshot_to_df(snapshot: Snapshot, spark: SparkSession) -> DataFrame:
     return files_to_df(spark, snapshot, snapshot.all_files())
-
-
-def uri_variants(path: str) -> list[str]:
-    """Canonical + decoded variants for matching."""
-    return [path, unquote(path)]

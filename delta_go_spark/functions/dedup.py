@@ -78,21 +78,6 @@ ORDER BY doc_id
 
 # ---------------------------------------------------------------------------
 # Shingling (shared by Jaccard + MinHash)
-def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
-    """Distinct k-token shingles per document as an array column.
-
-    Pure per-row expression work (split/transform/slice) — codegen, no
-    shuffle, no UDF.
-    """
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return df.withColumn("shingles", F.array_distinct(shingles))
-
-
 def with_shingle_hashes(
     df: DataFrame,
     id_col: str = "doc_id",

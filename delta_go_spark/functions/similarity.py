@@ -409,32 +409,6 @@ def _projection_col(i_col, plane: int) -> Column:
     return (F.pmod(h, F.lit(10000)).cast("double") / 10000.0) - 0.5
 
 
-def with_lsh_signature(
-    df: DataFrame, vec_col: str = "embedding", n_planes: int = 12, dim: int = 64
-) -> DataFrame:
-    """n_planes-bit signed-random-projection signature packed into a long.
-
-    bit_p = sign(v . plane_p).  Entirely expression-level; at scale this is
-    a single narrow map over the corpus.
-    """
-    e = _as_double(vec_col)
-
-    def plane_bit(p: int) -> Column:
-        proj = F.aggregate(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(e, i + 1) * _projection_col(i, p),
-        )
-        return F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-            F.lit(0).cast("long")
-        )
-
-    sig = plane_bit(0)
-    for p in range(1, n_planes):
-        sig = sig.bitwiseOR(plane_bit(p))
-    return df.withColumn("lsh_bucket", sig)
-
-
 def with_lsh_tables(
     df: DataFrame,
     vec_col: str = "embedding",

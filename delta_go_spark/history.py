@@ -9,7 +9,7 @@ import os
 from dataclasses import dataclass
 
 from delta_go_spark import filenames
-from delta_go_spark.actions import Action, CommitInfo, action_from_json
+from delta_go_spark.actions import Action, CommitInfo, read_commit_actions
 from delta_go_spark.snapshot import DeltaError
 from delta_go_spark.store import LogStore
 
@@ -50,8 +50,7 @@ class HistoryManager:
         path = filenames.delta_file(self.log_path, version)
         if not self.store.exists(path):
             raise DeltaError(f"no commit found at version {version}")
-        for line in self.store.read(path):
-            a = action_from_json(line)
+        for a in read_commit_actions(self.store, path):
             if isinstance(a, CommitInfo):
                 a.version = version
                 return a
@@ -207,9 +206,5 @@ class HistoryManager:
                 )
             expected = c.version + 1
             path = filenames.delta_file(self.log_path, c.version)
-            actions = tuple(
-                a
-                for a in (action_from_json(line) for line in self.store.read(path))
-                if a is not None
-            )
+            actions = tuple(read_commit_actions(self.store, path))
             yield VersionLog(c.version, actions)

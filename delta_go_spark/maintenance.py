@@ -233,11 +233,10 @@ def cleanup_expired_logs(log: DeltaLog, retention_millis: int | None = None) -> 
         # (VACUUM never touches _change_data/), so this is their only
         # reclamation point.
         if is_delta_file(name):
-            from delta_go_spark.actions import AddCDCFile, action_from_json
+            from delta_go_spark.actions import AddCDCFile, read_commit_actions
 
             try:
-                for line in log.store.read(meta.path):
-                    a = action_from_json(line)
+                for a in read_commit_actions(log.store, meta.path):
                     if isinstance(a, AddCDCFile):
                         cdc_path = os.path.join(log.table_path, a.decoded_path())
                         log.store.delete(cdc_path)

@@ -234,16 +234,18 @@ class DeltaScan:
         partition pruning first (free — no stats parse), then min/max
         stats skipping on the residual data predicate.
 
-        Above the distributed-state threshold the same pruning runs AS A
-        SPARK JOB over the reconstructed adds DataFrame and only the
-        survivors stream back — the driver never folds, or even holds,
-        the full file list (see _files_distributed)."""
+        On a large un-folded snapshot the same pruning runs AS A SPARK
+        JOB over the reconstructed adds DataFrame and only the survivors
+        stream back — the driver never folds, or even holds, the full
+        file list (see _files_distributed).  An existing fold is reused."""
         from pyspark.sql import SparkSession
 
         from delta_go_spark.snapshot import use_distributed_state
 
         spark = SparkSession.getActiveSession()
-        if use_distributed_state(spark, self.snapshot):
+        if self.snapshot._state is None and use_distributed_state(
+            spark, self.snapshot
+        ):
             yield from self._files_distributed(spark)
             return
         self.files_skipped_by_stats = 0

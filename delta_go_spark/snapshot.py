@@ -8,9 +8,9 @@ semantics), log_segment.go.
 Scale note: the log tail since the last checkpoint is small by
 construction (checkpoint every 10 commits), so the state fold is plain
 Python on the driver.  For tables whose *checkpoint* is huge (millions of
-files), `files_df()` exposes the active-file list as a Spark DataFrame read
-straight from the checkpoint parquet + JSON tail, so no file list need ever
-materialize on the driver.
+files), `checkpoint_adds_df()` rebuilds the active-file list as a Spark
+DataFrame read straight from the checkpoint parquet + JSON tail, so no file
+list need ever materialize on the driver.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 import threading
 from dataclasses import dataclass, field
-from urllib.parse import quote, unquote
+from urllib.parse import unquote
 
 from delta_go_spark import checkpoint as ckpt
 from delta_go_spark import filenames
@@ -30,7 +30,7 @@ from delta_go_spark.actions import (
     Protocol,
     RemoveFile,
     SetTransaction,
-    action_from_json,
+    read_commit_actions,
 )
 from delta_go_spark.config import TOMBSTONE_RETENTION, Clock, get_millis
 from delta_go_spark.store import LogStore
@@ -217,20 +217,25 @@ class InMemoryLogReplay:
             # CommitInfo / AddCDCFile don't contribute to state.
 
 
-def iter_segment_actions(store: LogStore, segment: LogSegment):
+def iter_segment_actions(
+    store: LogStore, segment: LogSegment, columns: list[str] | None = None
+):
     """All actions of a segment in ascending file order — checkpoint files
     first, then each delta (reference: snapshot.go:224-263) — as a
     GENERATOR: nothing beyond one arrow batch / one commit file's lines is
     ever materialized, mirroring the reference's streaming replay
     (replay_file.go:70-140).  On a table with a huge JSON tail the fold's
-    memory is the folded state itself, not the action stream."""
+    memory is the folded state itself, not the action stream.
+
+    `columns` projects the checkpoint's top-level action columns (parquet
+    column pruning, e.g. ["protocol", "metaData"]); the tail is small by
+    construction and always read in full."""
     if segment.checkpoints:
-        yield from ckpt.iter_checkpoint_actions(list(segment.checkpoints), store)
+        yield from ckpt.iter_checkpoint_actions(
+            list(segment.checkpoints), store, columns=columns
+        )
     for path in segment.deltas:
-        for line in store.read(path):
-            a = action_from_json(line)
-            if a is not None:
-                yield a
+        yield from read_commit_actions(store, path)
 
 
 class Snapshot:
@@ -252,7 +257,7 @@ class Snapshot:
         self._state: TableState | None = None
         self._pm: tuple[Protocol, Metadata] | None = None
         self._est_count: int | None = None
-        self._txns_lite: list[SetTransaction] | None = None
+        self._txns_tombstones = None  # memo of txns_and_tombstones()
 
     @property
     def version(self) -> int:
@@ -262,8 +267,8 @@ class Snapshot:
     def timestamp(self) -> int:
         return self.segment.last_commit_timestamp
 
-    # -- protocol & metadata: reverse replay, early exit
-    #    (reference: snapshot.go:182-222)
+    # -- protocol & metadata: forward replay over the checkpoint's
+    #    protocol/metaData columns only (reference: snapshot.go:182-222)
     def _resolve_pm(self) -> tuple[Protocol, Metadata]:
         if self._pm is not None:
             return self._pm
@@ -272,14 +277,13 @@ class Snapshot:
                 return self._pm
             protocol: Protocol | None = None
             metadata: Metadata | None = None
-            for batch in self._reverse_batches():
-                for a in reversed(batch):
-                    if protocol is None and isinstance(a, Protocol):
-                        protocol = a
-                    elif metadata is None and isinstance(a, Metadata):
-                        metadata = a
-                if protocol is not None and metadata is not None:
-                    break
+            for a in iter_segment_actions(
+                self.store, self.segment, ["protocol", "metaData"]
+            ):
+                if isinstance(a, Protocol):
+                    protocol = a
+                elif isinstance(a, Metadata):
+                    metadata = a
             if protocol is None:
                 raise DeltaError(
                     f"protocol action not found in version {self.version}"
@@ -291,24 +295,6 @@ class Snapshot:
             assert_protocol_read_compatible(protocol)
             self._pm = (protocol, metadata)
             return self._pm
-
-    def _reverse_batches(self):
-        for path in reversed(self.segment.deltas):
-            yield [
-                a
-                for a in (action_from_json(line) for line in self.store.read(path))
-                if a is not None
-            ]
-        if self.segment.checkpoints:
-            # Column-projected: the reverse P&M search needs only the
-            # protocol/metaData rows, so read just those parquet columns —
-            # never the add/remove payload (O(KB), not O(#files), on a
-            # million-file checkpoint).
-            yield ckpt.read_checkpoint_actions(
-                list(self.segment.checkpoints),
-                self.store,
-                columns=["protocol", "metaData"],
-            )
 
     def protocol(self) -> Protocol:
         return self._resolve_pm()[0]
@@ -328,11 +314,14 @@ class Snapshot:
             return 0
 
     def estimated_file_count(self) -> int:
-        """Upper bound on active files WITHOUT folding state: checkpoint
-        parquet footer row counts (O(footer bytes), no data pages) + tail
-        JSON line counts (the tail is read during any fold anyway).  Rows
-        also cover removes/txns/protocol/metadata, so this over-estimates —
-        the safe direction for routing to the distributed tier."""
+        """Upper bound on active files: the exact count when the state is
+        folded, else WITHOUT folding: checkpoint parquet footer row counts
+        (O(footer bytes), no data pages) + tail JSON line counts (the tail
+        is read during any fold anyway).  Rows also cover removes/txns/
+        protocol/metadata, so this over-estimates — the safe direction for
+        routing to the distributed tier."""
+        if self._state is not None:
+            return len(self._state.active_files)
         if self._est_count is not None:
             return self._est_count
         n = 0
@@ -361,6 +350,31 @@ class Snapshot:
                 raise DeltaError(f"metadata action not found in version {self.version}")
             self._state = st
             return st
+
+    def txns_and_tombstones(
+        self,
+    ) -> tuple[dict[str, SetTransaction], dict[str, RemoveFile]]:
+        """The fold's txn and tombstone maps without folding the checkpoint's
+        adds: the folded state when there is one, else the same fold over the
+        checkpoint's txn/remove columns plus the tail, memoized (a streaming
+        writer probes txn_version once per micro-batch).  Exact because a
+        checkpoint is folded state, so no path in it is both added and
+        removed; tail adds still cancel tombstones."""
+        if self._state is not None:
+            return self._state.set_transactions, self._state.tombstones
+        with self._lock:
+            if self._txns_tombstones is None:
+                replay = InMemoryLogReplay(
+                    self.table_root, self.min_file_retention_ts()
+                )
+                replay.append(
+                    iter_segment_actions(self.store, self.segment, ["txn", "remove"])
+                )
+                self._txns_tombstones = (
+                    replay.state.set_transactions,
+                    replay.state.tombstones,
+                )
+            return self._txns_tombstones
 
     def all_files(self) -> list[AddFile]:
         """Active AddFiles sorted by path (reference: snapshot.go:121-123,
@@ -410,10 +424,6 @@ def assert_protocol_read_compatible(protocol: Protocol) -> None:
         )
 
 
-def encode_rel_path(path: str) -> str:
-    return quote(path, safe="/")
-
-
 def _canonical_key_udf(table_root: str):
     """Spark-side canonical replay key: the SAME :func:`canonicalize_path`
     the driver fold keys on (replay_action.go:80-116 / resolver.go:87-126),
@@ -437,79 +447,6 @@ def _canonical_key_udf(table_root: str):
     return pandas_udf(_canon, "string")
 
 
-def active_files_df(spark, snapshot: "Snapshot"):
-    """Scale-path state reconstruction: the active-file set computed AS A
-    SPARK JOB instead of a driver-side Python fold.
-
-    For a 100 TB table the log tail is small but the checkpoint can carry
-    millions of AddFiles; this path reads the checkpoint parquet + tail
-    JSON commits with Spark, resolves newest-action-per-path with one
-    window (partitionBy path, orderBy version desc — the same
-    newest-wins/tombstone rule as replay_action.go:80-116), and returns a
-    DataFrame of active adds.  The driver never materializes the file list;
-    callers can aggregate (counts, total bytes) or join it distributively.
-
-    Equivalence with the Python fold is asserted in tests.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    seg = snapshot.segment
-    parts = []
-    if seg.checkpoints:
-        ck = (
-            spark.read.parquet(*[p for p in seg.checkpoints])
-            .select(
-                F.col("add.path").alias("path"),
-                F.col("add.size").alias("size"),
-                F.col("remove.path").alias("rm_path"),
-            )
-            .withColumn("version", F.lit(seg.checkpoint_version or -1).cast("long"))
-        )
-        parts.append(ck)
-    for path in seg.deltas:
-        v = int(os.path.basename(path).split(".")[0])
-        dj = (
-            spark.read.json(path)
-            .withColumn("version", F.lit(v).cast("long"))
-        )
-        cols = dj.columns
-        parts.append(
-            dj.select(
-                (F.col("add.path") if "add" in cols else F.lit(None)).alias("path"),
-                (F.col("add.size") if "add" in cols else F.lit(None).cast("long")).alias("size"),
-                (F.col("remove.path") if "remove" in cols else F.lit(None)).alias("rm_path"),
-                "version",
-            )
-        )
-    if not parts:
-        return spark.createDataFrame([], "path string, size long, version long")
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    canon = _canonical_key_udf(snapshot.table_root)
-    events = union.select(
-        F.coalesce("path", "rm_path").alias("path"),
-        "size",
-        "version",
-        F.col("path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    # newest version wins; within one version an add beats a remove
-    # (re-add-in-same-commit), matching the InMemoryLogReplay fold.  The
-    # window keys on the CANONICAL path so mixed spellings (relative
-    # percent-encoded add vs absolute remove) dedup exactly like the
-    # driver fold.
-    events = events.withColumn("_ckey", canon(F.col("path")))
-    w = Window.partitionBy("_ckey").orderBy(
-        F.desc("version"), F.desc("is_add")
-    )
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & F.col("is_add"))
-        .select("path", "size", "version")
-    )
-
-
 _ADD_STRUCT_DDL = (
     "struct<path:string,partitionValues:map<string,string>,size:bigint,"
     "modificationTime:bigint,dataChange:boolean,stats:string,"
@@ -522,14 +459,15 @@ def checkpoint_adds_df(spark, snapshot: "Snapshot"):
     values, stats, tags), reconstructed as a Spark job — the checkpoint
     writer's scale path.
 
-    Same newest-wins/tombstone fold as :func:`active_files_df` (window
-    over path, version desc, add-beats-remove within a version —
-    replay_action.go:80-116), but carrying the full add struct in the
-    parquet checkpoint layout so the result can be written straight into
-    multi-part checkpoint files without the driver ever materializing
-    the file list.  JSON-sourced partitionValues/tags arrive as structs
-    (Spark's JSON inference) and are converted to the checkpoint's
-    map<string,string> form; checkpoint-sourced rows already match.
+    Same newest-wins/tombstone fold as InMemoryLogReplay (one window
+    over the canonical path, version desc, add-beats-remove within a
+    version — replay_action.go:80-116), carrying the full add struct in
+    the parquet checkpoint layout so the result can be written straight
+    into multi-part checkpoint files, or pruned by a distributed scan,
+    without the driver ever materializing the file list.  JSON-sourced
+    partitionValues/tags arrive as structs (Spark's JSON inference) and
+    are converted to the checkpoint's map<string,string> form;
+    checkpoint-sourced rows already match.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -615,7 +553,11 @@ def checkpoint_adds_df(spark, snapshot: "Snapshot"):
         "version",
         F.col("add.path").isNotNull().alias("is_add"),
     ).filter(F.col("path").isNotNull())
-    # Canonical replay key, matching the driver fold (see active_files_df).
+    # newest version wins; within one version an add beats a remove
+    # (re-add-in-same-commit), matching the InMemoryLogReplay fold.  The
+    # window keys on the CANONICAL path so mixed spellings (relative
+    # percent-encoded add vs absolute remove) dedup exactly like the
+    # driver fold.
     events = events.withColumn("_ckey", canon(F.col("path")))
     w = Window.partitionBy("_ckey").orderBy(F.desc("version"), F.desc("is_add"))
     return (
@@ -626,26 +568,17 @@ def checkpoint_adds_df(spark, snapshot: "Snapshot"):
 
 
 # ---------------------------------------------------------------------------
-# Distributed state fold (round 6): route every state consumer on the DML /
-# commit / checkpoint path away from the driver-side AddFile dict when the
-# table is large.  The reference folds in memory (snapshot.go:224-297) —
-# fine for its connector role; at a million-file 100 TB table that is
-# GB-scale driver state on every commit, so above the threshold:
-#   - candidate files  -> Spark job over checkpoint_adds_df (scan.py)
-#   - checkpoint write -> write_checkpoint_spark (checkpoint.py:528)
-#   - protocol/metadata -> column-projected reverse replay (never the
-#     add/remove payload)
-#   - txn / tombstone state -> the "lite" folds below: column-pruned
-#     checkpoint reads, O(non-add rows + tail), bounded driver memory.
+# Distributed state tier: route every state consumer on the DML / commit /
+# checkpoint path away from the driver-side AddFile dict when the table is
+# large.  The reference folds in memory (snapshot.go:224-297) — fine for
+# its connector role; at a million-file 100 TB table that is GB-scale
+# driver state on every commit, so above the threshold:
+#   - candidate files   -> Spark job over checkpoint_adds_df (scan.py)
+#   - checkpoint write  -> write_checkpoint_spark (checkpoint.py)
+#   - protocol/metadata -> Snapshot._resolve_pm (projected, never adds)
+#   - txn / tombstones  -> Snapshot.txns_and_tombstones (projected fold)
 
-DISTRIBUTED_STATE_THRESHOLD_CONF = "spark.delta_go.state.distributedFileThreshold"
-
-
-def distributed_state_threshold(spark) -> int:
-    try:
-        return int(spark.conf.get(DISTRIBUTED_STATE_THRESHOLD_CONF, "200000"))
-    except Exception:
-        return 200_000
+DISTRIBUTED_FILE_THRESHOLD = 200_000
 
 
 def spark_can_read_log(spark, log_path: str) -> bool:
@@ -661,80 +594,16 @@ def spark_can_read_log(spark, log_path: str) -> bool:
 
 
 def use_distributed_state(spark, snapshot: "Snapshot | None") -> bool:
-    """True when state consumers should run as Spark jobs instead of
-    folding the AddFile dict on the driver: a live session that can read
-    the log, an un-folded snapshot (an existing fold is free to reuse),
-    and an estimated file count over the threshold."""
+    """True when the snapshot is large — estimated_file_count (exact once
+    folded) at least DISTRIBUTED_FILE_THRESHOLD — and a live session can
+    read its log.  The cheap checks run first: no session or a log Spark
+    cannot read never probes the estimate (on a register_store-bound log
+    that probe is the driver-side full read this tier exists to avoid)."""
     if spark is None or snapshot is None or snapshot.version < 0:
-        return False
-    if snapshot._state is not None:
-        return False
-    threshold = distributed_state_threshold(spark)
-    if threshold <= 0:
         return False
     if not spark_can_read_log(spark, snapshot.segment.log_path):
         return False
     try:
-        return snapshot.estimated_file_count() >= threshold
+        return snapshot.estimated_file_count() >= DISTRIBUTED_FILE_THRESHOLD
     except Exception:
         return False
-
-
-def set_transactions_lite(snapshot: "Snapshot") -> list[SetTransaction]:
-    """SetTransaction state WITHOUT the full fold: column-pruned checkpoint
-    read (txn pages only, nulls dropped Arrow-side) + tail JSON replay —
-    O(#apps + tail), never O(#files).  Same newest-wins semantics as
-    InMemoryLogReplay (later action replaces earlier).  Memoized on the
-    snapshot — a streaming writer probing txn_version per micro-batch
-    must not re-read the checkpoint txn pages every call."""
-    if snapshot._txns_lite is not None:
-        return snapshot._txns_lite
-    txns: dict[str, SetTransaction] = {}
-    seg = snapshot.segment
-    if seg.checkpoints:
-        for a in ckpt.iter_checkpoint_actions_pruned(
-            list(seg.checkpoints), snapshot.store, "txn"
-        ):
-            if isinstance(a, SetTransaction):
-                txns[a.app_id] = a
-    for path in seg.deltas:
-        for line in snapshot.store.read(path):
-            a = action_from_json(line)
-            if isinstance(a, SetTransaction):
-                txns[a.app_id] = a
-    snapshot._txns_lite = list(txns.values())
-    return snapshot._txns_lite
-
-
-def tombstones_lite(
-    snapshot: "Snapshot", min_file_retention_ts: int | None = None
-) -> list[RemoveFile]:
-    """Unexpired tombstones WITHOUT the full fold: column-pruned checkpoint
-    read (remove pages only) + tail replay, O(#tombstones + tail).
-
-    Replay-exact under the checkpoint invariant that a spec-compliant
-    writer emits disjoint add/remove sets (a checkpoint is folded state,
-    so no path appears as both) — tail adds still pop re-added paths and
-    tail removes insert, exactly like InMemoryLogReplay."""
-    if min_file_retention_ts is None:
-        min_file_retention_ts = snapshot.min_file_retention_ts()
-    tomb: dict[str, RemoveFile] = {}
-    seg = snapshot.segment
-    root = snapshot.table_root
-    if seg.checkpoints:
-        for a in ckpt.iter_checkpoint_actions_pruned(
-            list(seg.checkpoints), snapshot.store, "remove"
-        ):
-            if isinstance(a, RemoveFile) and (
-                (a.deletion_timestamp or 0) > min_file_retention_ts
-            ):
-                tomb[canonicalize_path(a.path, root)] = a
-    for path in seg.deltas:
-        for line in snapshot.store.read(path):
-            a = action_from_json(line)
-            if isinstance(a, AddFile):
-                tomb.pop(canonicalize_path(a.path, root), None)
-            elif isinstance(a, RemoveFile):
-                if (a.deletion_timestamp or 0) > min_file_retention_ts:
-                    tomb[canonicalize_path(a.path, root)] = a
-    return list(tomb.values())

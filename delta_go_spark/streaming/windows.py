@@ -443,6 +443,31 @@ QUERIES["streaming_interval_join_events"] = (
 )
 
 
+def _isolated_stream_session(spark):
+    """A new session on the shared context (own SQL conf) whose shuffle and
+    state partition count is sized to a stream's KEY CARDINALITY — a
+    property of the query, not the data volume — leaving the parent
+    session's batch shuffle parallelism untouched.  Default 4;
+    deployments with genuinely large key spaces set
+    SPARK_GRAFT_STREAM_STATE_PARTITIONS.  A value that is not a positive
+    integer raises here, at setup, not inside the first micro-batch."""
+    import os
+
+    raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, "
+            f"got {raw!r}"
+        )
+    ns = spark.newSession()
+    ns.conf.set("spark.sql.shuffle.partitions", str(n))
+    return ns
+
+
 # ---------------------------------------------------------------------------
 # Stream-static enrichment join: the canonical Structured Streaming lookup
 # pattern — a streaming fact joined to a STATIC dimension (broadcast into
@@ -453,26 +478,14 @@ QUERIES["streaming_interval_join_events"] = (
 def streaming_static_enrich_events(spark, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     # The stateful aggregate's key space is (4 tiers) x (handful of event
-    # types) ~ 20 groups AT ANY SCALE — the key cardinality is fixed by
-    # the query, not the data volume — yet the state store allocated one
+    # types) ~ 20 groups AT ANY SCALE, yet the state store allocated one
     # partition per session shuffle partition (= cores), and EVERY
     # micro-batch pays a per-partition state-store commit (delta file
     # write + rename).  Profiled at sf0.1/local[32]: 32 state partitions,
     # summed commitTimeMs 14-74 s per batch for 20 state rows — the
     # row's entire cost is this fixed overhead (r13 verdict item 3).
-    # Run the stream in an ISOLATED session (newSession: shared context,
-    # own SQL conf) with state partitions sized to the KEY CARDINALITY —
-    # a scale-independent property — leaving the parent session's batch
-    # shuffle parallelism untouched.  Deployments with genuinely large
-    # key spaces size it via SPARK_GRAFT_STREAM_STATE_PARTITIONS.
-    import os as _os
-
-    ns = spark.newSession()
+    ns = _isolated_stream_session(spark)
     ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ns.conf.set(
-        "spark.sql.shuffle.partitions",
-        _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"),
-    )
     schema = ns.read.parquet(path).schema
     stream = (
         ns.readStream.schema(schema)
@@ -767,25 +780,17 @@ def streaming_delta_aggsink_events(spark, sf_dir: str) -> DataFrame:
     from delta_go_spark.dml import DeltaDml
     from delta_go_spark.writer import write_dataframe
 
-    src = _ev4_split(spark, sf_dir)
-    run_dir = _run_scratch(os.path.dirname(src), "aggsink_runs")
-    target = os.path.join(run_dir, "agg")
     # Per-batch work here is a groupBy whose output is O(event types) and
     # a MERGE into an O(event types) aggregate table, yet every batch ran
     # its aggregate + merge joins at the parent session's one-partition-
     # per-core shuffle width (32 tasks per tiny exchange x ~8 exchanges x
     # 4 batches at sf0.1/local[32]).  Same remedy as the static-enrich
-    # row (r13 verdict item 3): an ISOLATED session (shared context, own
-    # SQL conf) with shuffle width sized to the KEY CARDINALITY — a
-    # property of the query, not the data volume — leaving the parent
-    # session's batch parallelism untouched.  Real deployments with wide
-    # key spaces size it via SPARK_GRAFT_STREAM_STATE_PARTITIONS.  The
-    # result is partitioning-independent (additive integer merge).
-    ns = spark.newSession()
-    ns.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"),
-    )
+    # row: an isolated session sized to the key cardinality.  The result
+    # is partitioning-independent (additive integer merge).
+    ns = _isolated_stream_session(spark)
+    src = _ev4_split(spark, sf_dir)
+    run_dir = _run_scratch(os.path.dirname(src), "aggsink_runs")
+    target = os.path.join(run_dir, "agg")
     seed = ns.createDataFrame(
         [], "event_type string, n_events long, value_cents long"
     )

@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import uuid
 
+from pyspark.sql import SparkSession
+
 from delta_go_spark import config as cfg
 from delta_go_spark import filenames, ops
 from delta_go_spark.actions import (
@@ -23,13 +25,18 @@ from delta_go_spark.actions import (
     Protocol,
     RemoveFile,
     SetTransaction,
-    action_from_json,
     action_to_json,
+    read_commit_actions,
     READER_VERSION,
     WRITER_VERSION,
 )
 from delta_go_spark.expressions import Expression
-from delta_go_spark.snapshot import DeltaError, Snapshot, canonicalize_path
+from delta_go_spark.snapshot import (
+    DeltaError,
+    Snapshot,
+    canonicalize_path,
+    use_distributed_state,
+)
 from delta_go_spark.store import FileAlreadyExistsError
 from delta_go_spark.types import (
     is_write_compatible,
@@ -93,32 +100,17 @@ class OptimisticTransaction:
 
     # -- reads recorded for conflict detection ----------------------------
     def txn_version(self, app_id: str) -> int:
-        """Idempotency lookup (reference: trnx.go:330-337).  On a large
-        un-folded snapshot the lookup runs off the lite fold (column-
-        pruned checkpoint txn pages + tail) instead of materializing the
-        AddFile dict just to read one SetTransaction."""
+        """Idempotency lookup (reference: trnx.go:330-337).  A large
+        un-folded snapshot answers from its projected txn fold instead of
+        materializing the AddFile dict just to read one SetTransaction."""
         self.read_txns.add(app_id)
         if self.snapshot is None:
             return -1
-        from delta_go_spark.snapshot import (
-            set_transactions_lite,
-            use_distributed_state,
-        )
-
-        if self.snapshot._state is None:
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
-            # Same gate as every other distributed-state consumer: honors
-            # the threshold<=0 disable and never probes estimated_file_count
-            # on a register_store-bound log (whose count would fall back to
-            # driver-side full reads — the cost this tier exists to avoid).
-            if use_distributed_state(spark, self.snapshot):
-                for t in set_transactions_lite(self.snapshot):
-                    if t.app_id == app_id:
-                        return t.version
-                return -1
-        t = self.snapshot.state().set_transactions.get(app_id)
+        if use_distributed_state(SparkSession.getActiveSession(), self.snapshot):
+            txns = self.snapshot.txns_and_tombstones()[0]
+        else:
+            txns = self.snapshot.state().set_transactions
+        t = txns.get(app_id)
         return t.version if t else -1
 
     def mark_files_as_read(self, predicate: Expression) -> list[AddFile]:
@@ -376,11 +368,7 @@ class OptimisticTransaction:
     def _check_conflicts(self, winning_version: int, isolation: str) -> None:
         """The six rules (reference: conflict_checker.go:108-243)."""
         path = filenames.delta_file(self.log.log_path, winning_version)
-        winning = [
-            a
-            for a in (action_from_json(line) for line in self.log.store.read(path))
-            if a is not None
-        ]
+        winning = list(read_commit_actions(self.log.store, path))
         # 1. protocol (conflict_checker.go:125-144)
         for a in winning:
             if isinstance(a, Protocol):
@@ -443,39 +431,11 @@ class OptimisticTransaction:
                 return True
         return False
 
-    def _use_distributed_checkpoint(self, n_files: int) -> bool:
-        """Route the checkpoint through the Spark-job multi-part writer
-        when the active-file count crosses the configured threshold
-        (spark.delta_go.checkpoint.distributedFileThreshold, default
-        200k) — a million-add pyarrow table on the driver is the scale
-        ceiling this avoids.  Requires a live session and a log Spark
-        itself can read (local path or native-capable cloud; never a
-        register_store-bound fake)."""
-        from pyspark.sql import SparkSession
-
-        from delta_go_spark.snapshot import spark_can_read_log
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return False
-        try:
-            threshold = int(
-                spark.conf.get(
-                    "spark.delta_go.checkpoint.distributedFileThreshold",
-                    "200000",
-                )
-            )
-        except Exception:
-            threshold = 200_000
-        if n_files < max(1, threshold):
-            return False
-        # Single source of truth for "may Spark executors read this log?"
-        # — shared with the distributed state tier (snapshot.py).
-        return spark_can_read_log(spark, self.log.log_path)
-
     def _post_commit(self, version: int) -> None:
         """Checkpoint every checkpointInterval commits
-        (reference: trnx.go:647-675)."""
+        (reference: trnx.go:647-675).  A large table's checkpoint is
+        written by the Spark-job writer: a million-add pyarrow table on
+        the driver is the scale ceiling it avoids."""
         from delta_go_spark import checkpoint as ckpt_mod
 
         snap = self.log.update()
@@ -490,22 +450,9 @@ class OptimisticTransaction:
                 if snap.version == version
                 else self.log.snapshot_for_version_as_of(version)
             )
-            from pyspark.sql import SparkSession
-
-            from delta_go_spark.snapshot import (
-                set_transactions_lite,
-                tombstones_lite,
-                use_distributed_state,
-            )
-
             spark = SparkSession.getActiveSession()
-            # Fully distributed tier: above the state threshold the driver
-            # never folds — protocol/metadata come from the column-
-            # projected reverse replay, txn/tombstone state from the lite
-            # folds, adds from the Spark reconstruction inside the writer.
-            if use_distributed_state(spark, target) and self._use_distributed_checkpoint(
-                target.estimated_file_count()
-            ):
+            if use_distributed_state(spark, target):
+                txns, tombstones = target.txns_and_tombstones()
                 ckpt_mod.write_checkpoint_spark(
                     spark,
                     self.log.store,
@@ -514,28 +461,14 @@ class OptimisticTransaction:
                     target,
                     target.protocol(),
                     target.metadata(),
-                    set_transactions_lite(target),
-                    tombstones_lite(target),
-                    # upper-bound estimate sizes the parts; the writer
-                    # records the exact count from the part footers
+                    list(txns.values()),
+                    list(tombstones.values()),
+                    # an upper-bound estimate only sizes the parts; the
+                    # writer records the exact count from the part footers
                     n_adds=target.estimated_file_count(),
                 )
-            elif self._use_distributed_checkpoint(
-                len((st := target.state()).active_files)
-            ):
-                ckpt_mod.write_checkpoint_spark(
-                    spark,
-                    self.log.store,
-                    self.log.log_path,
-                    version,
-                    target,
-                    st.protocol,
-                    st.metadata,
-                    list(st.set_transactions.values()),
-                    list(st.tombstones.values()),
-                    n_adds=len(st.active_files),
-                )
             else:
+                st = target.state()
                 ckpt_mod.write_checkpoint(
                     self.log.store,
                     self.log.log_path,

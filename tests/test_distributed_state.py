@@ -1,10 +1,11 @@
-"""Distributed transaction/snapshot state fold (round 6).
+"""Distributed transaction/snapshot state fold.
 
-Above `spark.delta_go.state.distributedFileThreshold` the DML / commit /
-checkpoint path must never materialize the full AddFile dict on the
-driver: candidate files come from a Spark job over the reconstructed adds
-DataFrame, protocol/metadata from the column-projected reverse replay,
-txn/tombstone state from the lite folds (column-pruned checkpoint reads).
+Above `snapshot.DISTRIBUTED_FILE_THRESHOLD` the DML / commit / checkpoint
+path must never materialize the full AddFile dict on the driver:
+candidate files come from a Spark job over the reconstructed adds
+DataFrame, protocol/metadata from the column-projected forward replay,
+txn/tombstone state from the projected fold (column-pruned checkpoint
+reads).
 
 Reference mechanism being scaled: snapshot.go:224-297 (in-memory fold) /
 replay_file.go:70-140 (streaming replay).
@@ -15,26 +16,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from delta_go_spark import ops
+from delta_go_spark import snapshot as snap_mod
 from delta_go_spark.expressions import Column, EqualTo, Literal
 from delta_go_spark.log import DeltaLog
-from delta_go_spark.snapshot import (
-    DISTRIBUTED_STATE_THRESHOLD_CONF,
-    Snapshot,
-    set_transactions_lite,
-    tombstones_lite,
-)
+from delta_go_spark.snapshot import Snapshot
 from delta_go_spark.table import DeltaTable
-
-CKPT_THRESHOLD_CONF = "spark.delta_go.checkpoint.distributedFileThreshold"
 
 
 @pytest.fixture
-def low_thresholds(spark):
-    spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "5")
-    spark.conf.set(CKPT_THRESHOLD_CONF, "5")
-    yield
-    spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "200000")
-    spark.conf.set(CKPT_THRESHOLD_CONF, "200000")
+def low_threshold():
+    # its own MonkeyPatch, so a test's monkeypatch.undo() keeps the
+    # threshold low
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(snap_mod, "DISTRIBUTED_FILE_THRESHOLD", 5)
+        yield mp
 
 
 def _partitioned_table(spark, tmp_path, name, n_appends=9):
@@ -58,7 +53,7 @@ def _partitioned_table(spark, tmp_path, name, n_appends=9):
 
 
 def test_delete_at_scale_never_folds_driver_state(
-    spark, tmp_path, low_thresholds, monkeypatch
+    spark, tmp_path, low_threshold, monkeypatch
 ):
     """The VERDICT-r5 'done' bar: a DELETE on a table above the threshold
     commits — including its distributed multi-part checkpoint at the
@@ -95,7 +90,7 @@ def test_delete_at_scale_never_folds_driver_state(
     assert t.log.commit_info_at(10).operation == ops.DELETE
 
 
-def test_distributed_scan_matches_driver_scan(spark, tmp_path, low_thresholds):
+def test_distributed_scan_matches_driver_scan(spark, tmp_path, low_threshold):
     """Candidate selection must be bit-identical across tiers: same
     surviving files, same partition pruning, same stats skipping."""
     path = _partitioned_table(spark, tmp_path, "scaneq", n_appends=3)
@@ -105,7 +100,7 @@ def test_distributed_scan_matches_driver_scan(spark, tmp_path, low_thresholds):
     assert snap_dist._state is None
     dist = {a.path for a in snap_dist.scan(pred).files()}
 
-    spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "200000")
+    low_threshold.setattr(snap_mod, "DISTRIBUTED_FILE_THRESHOLD", 200_000)
     snap_drv = DeltaLog.for_table(path).update()
     drv = {a.path for a in snap_drv.scan(pred).files()}
     assert dist == drv and len(dist) > 0
@@ -114,8 +109,9 @@ def test_distributed_scan_matches_driver_scan(spark, tmp_path, low_thresholds):
 
 
 def test_lite_folds_match_full_state(spark, tmp_path):
-    """set_transactions_lite / tombstones_lite == the InMemoryLogReplay
-    fold on a log with a checkpoint, deletes, re-adds and txn markers."""
+    """The projected txn/tombstone fold (Snapshot.txns_and_tombstones on
+    an un-folded snapshot) == the full InMemoryLogReplay fold on a log
+    with a checkpoint, deletes, re-adds and txn markers."""
     from delta_go_spark.actions import SetTransaction
 
     path = _partitioned_table(spark, tmp_path, "liteeq", n_appends=9)
@@ -130,16 +126,18 @@ def test_lite_folds_match_full_state(spark, tmp_path):
     t.delete(EqualTo(Column("p", LongType()), Literal(2)))
 
     snap = DeltaLog.for_table(path).update()
+    assert snap.segment.checkpoints and snap.segment.deltas
+    lite_txns_map, lite_tombs_map = snap.txns_and_tombstones()
+    assert snap._state is None  # the projected fold folds no adds
     st = snap.state()
-    lite_txns = {x.app_id: x.version for x in set_transactions_lite(snap)}
+    lite_txns = {k: x.version for k, x in lite_txns_map.items()}
     assert lite_txns == {
         k: v.version for k, v in st.set_transactions.items()
     }
     assert lite_txns["app-lite"] == 42
-    lite_tombs = {x.path for x in tombstones_lite(snap)}
-    assert lite_tombs == set(st.tombstones.keys()) or lite_tombs == {
-        r.path for r in st.tombstones.values()
-    }
+    lite_tombs = {x.path for x in lite_tombs_map.values()}
+    assert set(lite_tombs_map) == set(st.tombstones)
+    assert lite_tombs == {r.path for r in st.tombstones.values()}
     assert len(lite_tombs) > 0
 
 
@@ -162,17 +160,16 @@ def test_pm_resolution_reads_only_pm_columns(spark, tmp_path, monkeypatch):
     t.delete(EqualTo(Column("p", LongType()), Literal(5)))  # checkpoint @10
 
     seen = []
-    orig = ckpt_mod.read_checkpoint_actions
+    orig = ckpt_mod.iter_checkpoint_actions
 
-    def spy(paths, store=None, columns=None):
+    def spy(paths, store=None, batch_size=10_000, columns=None):
         seen.append(columns)
-        return orig(paths, store, columns=columns)
+        return orig(paths, store, batch_size, columns=columns)
 
-    monkeypatch.setattr(ckpt_mod, "read_checkpoint_actions", spy)
+    monkeypatch.setattr(ckpt_mod, "iter_checkpoint_actions", spy)
     snap = DeltaLog.for_table(path).update()
     assert snap.segment.checkpoints  # anchored on the new checkpoint
-    # force the reverse P&M replay to reach the checkpoint batch: the
-    # tail is empty right after the checkpoint commit, so it must
+    # the forward P&M replay reads the checkpoint before the tail
     snap.metadata()
     assert seen and all(c == ["protocol", "metaData"] for c in seen)
 
@@ -187,7 +184,7 @@ def test_distributed_fold_dedups_on_canonical_path(spark, tmp_path):
     import json as _json
 
     from delta_go_spark.log import DeltaLog
-    from delta_go_spark.snapshot import active_files_df, checkpoint_adds_df
+    from delta_go_spark.snapshot import checkpoint_adds_df
 
     root = str(tmp_path / "mixed")
     log_dir = tmp_path / "mixed" / "_delta_log"
@@ -249,10 +246,73 @@ def test_distributed_fold_dedups_on_canonical_path(spark, tmp_path):
     snap = DeltaLog.for_table(root).snapshot()
     # driver fold: one survivor
     assert sorted(a.path for a in snap.all_files()) == ["keep.parquet"]
-    # distributed folds must agree
-    df_paths = sorted(r["path"] for r in active_files_df(spark, snap).collect())
-    assert df_paths == ["keep.parquet"]
+    # the distributed fold must agree
+    ck = sorted(
+        (r["path"], r["size"])
+        for r in checkpoint_adds_df(spark, snap).select("add.path", "add.size").collect()
+    )
+    assert ck == [("keep.parquet", 2)]
     ck_paths = sorted(
         r["path"] for r in checkpoint_adds_df(spark, snap).select("add.path").collect()
     )
     assert ck_paths == ["keep.parquet"]
+
+
+def test_checkpoint_adds_df_matches_driver_fold(spark, tmp_path):
+    """The Spark-job reconstruction equals the driver fold — paths,
+    partition values, sizes and stats — on a checkpoint + tail log with a
+    tombstone in the checkpoint re-added in the tail, a delete in the
+    tail, a re-add of that path in a later commit, and a remove + add of
+    one path in the same commit."""
+    import json as _json
+
+    from delta_go_spark.actions import AddFile, Metadata, RemoveFile
+    from delta_go_spark.snapshot import checkpoint_adds_df
+
+    def add(name, p, n):
+        return AddFile(
+            path=f"p={p}/{name}.parquet", partition_values={"p": str(p)},
+            size=n, modification_time=1, data_change=True,
+            stats=_json.dumps({"numRecords": n}),
+        )
+
+    def remove(name, p):
+        return RemoveFile(path=f"p={p}/{name}.parquet", deletion_timestamp=2,
+                          data_change=True)
+
+    path = str(tmp_path / "foldeq")
+    schema = _json.dumps({"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+        {"name": "p", "type": "long", "nullable": True, "metadata": {}},
+    ]})
+    log = DeltaLog.for_table(path)
+    txn = log.start_transaction()
+    txn.update_metadata(Metadata(schema_string=schema, partition_columns=["p"],
+                                 configuration={"delta.checkpointInterval": "3"}))
+    txn.commit([add("f0", 0, 10), add("f1", 1, 11), add("f2", 0, 12)],
+               ops.CREATE_TABLE)
+    commits = [
+        [remove("f2", 0)],                      # v1: tombstone in the checkpoint
+        [add("f3", 1, 13)],                     # v2
+        [add("f4", 0, 14)],                     # v3: checkpoint
+        [remove("f1", 1), add("f2", 0, 22)],    # v4: tail delete + re-add of f2
+        [add("f1", 1, 21), remove("f3", 1), add("f3", 1, 23)],  # v5
+    ]
+    for actions in commits:
+        log.start_transaction().commit(actions, ops.WRITE)
+
+    snap = DeltaLog.for_table(path).snapshot()
+    assert snap.segment.checkpoint_version == 3
+    assert len(snap.segment.deltas) == 2
+    driver = {
+        a.path: (a.partition_values, a.size, a.stats) for a in snap.all_files()
+    }
+    spark_fold = {
+        r["path"]: (dict(r["partitionValues"]), r["size"], r["stats"])
+        for r in checkpoint_adds_df(spark, snap).select("add.*").collect()
+    }
+    assert spark_fold == driver
+    assert {p: v[1] for p, v in driver.items()} == {
+        "p=0/f0.parquet": 10, "p=0/f2.parquet": 22, "p=0/f4.parquet": 14,
+        "p=1/f1.parquet": 21, "p=1/f3.parquet": 23,
+    }

@@ -329,18 +329,17 @@ def test_distributed_checkpoint_survives_inflated_estimate(spark, tmp_path):
     assert snap2.to_df(spark).count() == 1
 
 
-def test_distributed_checkpoint_threshold_wiring(spark, tmp_path):
-    """Above spark.delta_go.checkpoint.distributedFileThreshold the
-    postCommit checkpoint goes through the Spark-job writer (multi-part
-    group appears at the checkpointInterval boundary)."""
+def test_distributed_checkpoint_threshold_wiring(spark, tmp_path, monkeypatch):
+    """At or above snapshot.DISTRIBUTED_FILE_THRESHOLD the postCommit
+    checkpoint goes through the Spark-job writer (multi-part group
+    appears at the checkpointInterval boundary)."""
     import os
 
+    from delta_go_spark import snapshot as snap_mod
+
     path = str(tmp_path / "dckpt2")
-    old = spark.conf.get(
-        "spark.delta_go.checkpoint.distributedFileThreshold", None
-    )
-    spark.conf.set("spark.delta_go.checkpoint.distributedFileThreshold", "1")
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(snap_mod, "DISTRIBUTED_FILE_THRESHOLD", 1)
         DeltaTable.create(
             spark,
             path,
@@ -350,13 +349,6 @@ def test_distributed_checkpoint_threshold_wiring(spark, tmp_path):
         t = DeltaTable.for_path(spark, path)
         t.append(spark.range(10, 20).select(F.col("id").alias("k")))
         t.append(spark.range(20, 30).select(F.col("id").alias("k")))
-    finally:
-        if old is None:
-            spark.conf.unset("spark.delta_go.checkpoint.distributedFileThreshold")
-        else:
-            spark.conf.set(
-                "spark.delta_go.checkpoint.distributedFileThreshold", old
-            )
     names = os.listdir(os.path.join(path, "_delta_log"))
     multi = [n for n in names if ".checkpoint.0000000" in n]
     assert multi, names  # multi-part group written at version 2

@@ -4,6 +4,7 @@ watermarked windowed aggregation over a real stream."""
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from delta_go_spark.log import DeltaLog
@@ -495,3 +496,20 @@ def test_stream_stream_leftouter_emits_unmatched_after_watermark(spark, tmp_path
     # u0 matched once; u1 emitted exactly once as unconverted (its only
     # purchase is outside the window); no duplicates
     assert sorted(rows, key=lambda x: x[0]) == [(0, 10.0), (1, None)]
+
+
+@pytest.mark.parametrize("bad", ["0", "abc"])
+def test_stream_state_partitions_env_rejected_at_setup(
+    spark, tmp_path, monkeypatch, bad
+):
+    """A SPARK_GRAFT_STREAM_STATE_PARTITIONS value that is not a positive
+    integer fails loudly when the isolated stream session is built — a
+    plain ValueError before any input is read or stream started, not an
+    error inside the first micro-batch."""
+    from delta_go_spark.queries import queries
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", bad)
+    for name in ("streaming_static_enrich_events", "streaming_delta_aggsink_events"):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
+            queries()[name](spark, str(tmp_path))
+    assert spark.streams.active == []
